@@ -790,6 +790,42 @@ def test_auto_probe_memoized_per_source(spark, monkeypatch):
     api.clear_auto_probe_cache()
 
 
+def test_auto_probe_failure_is_recorded(spark, tmp_path, monkeypatch):
+    """A probe step that raises is skipped, not hidden: its exception
+    class and message land under ``probe_errors`` in the decision record
+    (and so in the service's job status), and the job still runs."""
+    import tsp_spark.api as api
+    from tsp_spark.api import RawPattern, search_incidents
+
+    monkeypatch.setattr(api, "AUTO_PROBE_MIN_BYTES", 1)
+    api.clear_auto_probe_cache()
+    src_path = str(tmp_path / "probe_src")
+    spark.range(200).select(
+        F.lit(0).alias("unit"),
+        F.timestamp_millis(F.lit(1_704_067_200_000) + F.col("id") * 100).alias("ts"),
+        (F.col("id") % 7 / 7.0).alias("x"),
+    ).write.parquet(src_path)
+    df = spark.read.parquet(src_path)
+    kw = dict(
+        keys=["unit"], ts="ts", fields_types={"x": "float64"},
+        max_gap_ms=60_000, session_gap_ms=10_000,
+    )
+    pats = [RawPattern(1, "x < 0.5")]
+    clean: dict = {}
+    want = search_incidents(df, pats, decision_sink=clean, **kw).count()
+    assert clean["probed"] and "probe_errors" not in clean
+
+    def broken_listing(self):
+        raise RuntimeError("listing unavailable")
+
+    api.clear_auto_probe_cache()
+    monkeypatch.setattr(type(df), "inputFiles", broken_listing)
+    d: dict = {}
+    assert search_incidents(df, pats, decision_sink=d, **kw).count() == want
+    assert d["probed"]
+    assert d["probe_errors"] == {"file_signature": "RuntimeError: listing unavailable"}
+
+
 def test_auto_probe_cache_lru_and_file_signature(spark, tmp_path, monkeypatch):
     """r13 (ADVICE r12): (a) the probe memo keys on a file-index
     signature, so APPENDING files to a parquet source re-probes

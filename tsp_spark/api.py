@@ -508,7 +508,19 @@ def clear_auto_probe_cache() -> None:
         _auto_probe_cache.clear()
 
 
-def _file_signature(raw_src: DataFrame) -> str | None:
+def _note_probe_error(
+    errors: dict[str, str] | None, site: str, exc: Exception
+) -> None:
+    """Record a swallowed auto-probe failure under ``site`` so it reaches
+    the job's decision record (``probe_errors``) instead of silently
+    keeping a hot-key job on the unsharded path."""
+    if errors is not None:
+        errors[site] = f"{type(exc).__name__}: {exc}"[:500]
+
+
+def _file_signature(
+    raw_src: DataFrame, errors: dict[str, str] | None = None
+) -> str | None:
     """Cheap content signature for FILE-backed sources: md5 over the
     sorted input-file list (count + names; names are immutable-once-
     written for parquet, so appends and compactions both change the
@@ -519,7 +531,8 @@ def _file_signature(raw_src: DataFrame) -> str | None:
 
     try:
         files = raw_src.inputFiles()
-    except Exception:  # pragma: no cover - py4j surface varies
+    except Exception as exc:  # py4j surface varies
+        _note_probe_error(errors, "file_signature", exc)
         return None
     if not files:
         return None
@@ -530,7 +543,10 @@ def _file_signature(raw_src: DataFrame) -> str | None:
 
 
 def _cached_auto_shard(
-    raw_src: DataFrame, keys: Sequence[str], ts: str
+    raw_src: DataFrame,
+    keys: Sequence[str],
+    ts: str,
+    errors: dict[str, str] | None = None,
 ) -> tuple[int | None, dict | None, bool, float]:
     """(decided shard width, probe stats, came-from-cache, entry age in
     seconds). Keys on an md5 of the CANONICALIZED analyzed plan string
@@ -540,9 +556,10 @@ def _cached_auto_shard(
     wrong decision for a TTL — plus the file-index signature so a
     file-source append invalidates immediately. Falls back to an
     uncached probe when the plan refuses to stringify (exotic py4j
-    surface). The probe itself runs OUTSIDE the lock (it is a Spark
-    job); two racing first callers may both probe, which is benign —
-    last write wins with an identical decision."""
+    surface); swallowed failures land in ``errors``. The probe itself
+    runs OUTSIDE the lock (it is a Spark job); two racing first callers
+    may both probe, which is benign — last write wins with an identical
+    decision."""
     import hashlib
     import time as _time
 
@@ -552,11 +569,12 @@ def _cached_auto_shard(
         )
         cache_key = (
             hashlib.md5(canon.encode()).hexdigest(),
-            _file_signature(raw_src),
+            _file_signature(raw_src, errors),
             tuple(keys),
             ts,
         )
-    except Exception:  # pragma: no cover - py4j surface varies
+    except Exception as exc:  # py4j surface varies
+        _note_probe_error(errors, "plan_cache_key", exc)
         cache_key = None
     now = _time.monotonic()
     if cache_key is not None:
@@ -575,7 +593,9 @@ def _cached_auto_shard(
     return decision, stats, False, 0.0
 
 
-def _plan_size_bytes(df: DataFrame) -> int | None:
+def _plan_size_bytes(
+    df: DataFrame, errors: dict[str, str] | None = None
+) -> int | None:
     """Catalyst's sizeInBytes estimate for the optimized plan — free
     (statistics only, no job). None when unavailable or when the
     estimate is the 'unknown' sentinel (spark.sql.defaultSizeInBytes =
@@ -587,7 +607,8 @@ def _plan_size_bytes(df: DataFrame) -> int | None:
         # py4j maps scala.math.BigInt to a Python int when it fits; fall
         # back to toString for the huge-sentinel case
         size = int(size) if isinstance(size, int) else int(size.toString())
-    except Exception:  # pragma: no cover - py4j surface varies
+    except Exception as exc:  # py4j surface varies
+        _note_probe_error(errors, "plan_size", exc)
         return None
     # Long.MaxValue (or anything absurd) means "unknown", not "huge"
     return size if 0 <= size < (1 << 62) else None
@@ -877,7 +898,9 @@ def search_incidents(
     re-submitting against the same source pays the ~0.4 s probe scan
     once per TTL, not per call (r12). Pass ``decision_sink={}`` to
     receive the resolved decision (mode / eligible / probed /
-    probe_cached / shard_ms) — the job service surfaces it in status.
+    probe_cached / shard_ms, plus ``probe_errors`` — site -> exception
+    class and message — when a probe step failed and was skipped) —
+    the job service surfaces it in status.
 
     One carve-out (r12, docs/SEMANTICS.md §18): FLOAT ``sum``/``avg``
     at prefix-form windows (≥ 5 min under ``window_agg="auto"``)
@@ -967,12 +990,15 @@ def search_incidents(
         # table). Unknown-size sources (JDBC/RDD: a probe scan could
         # be arbitrarily expensive) are still never probed.
         need_rate = any(_window_needs_rate(n) for n in nodes)
+        # a failed size estimate or cache key would otherwise turn the
+        # probe (and with it sharding) off without a trace: record it
+        probe_errors: dict[str, str] = {}
         if shard_eligible or need_rate:
-            size = _plan_size_bytes(raw_src)
+            size = _plan_size_bytes(raw_src, probe_errors)
             big = size is not None and size >= AUTO_PROBE_MIN_BYTES
             if big or (need_rate and size is not None):
                 decision, pstats, cached, age_s = _cached_auto_shard(
-                    raw_src, keys, ts
+                    raw_src, keys, ts, probe_errors
                 )
                 if shard_eligible and big:
                     shard_ms = decision
@@ -999,6 +1025,8 @@ def search_incidents(
                     note["hot_rate_hz"] = round(hot_rate, 3)
                     note["max_rate_hz"] = round(rate, 3)
                     compiler.event_rate_hz = rate
+        if probe_errors:
+            note["probe_errors"] = probe_errors
         if decision_sink is not None:
             decision_sink.update(note)
     elif decision_sink is not None:

@@ -7,9 +7,16 @@ Arrow for the Pandas-UDF slow path, UTC session time zone.
 
 from __future__ import annotations
 
+import logging
 import os
 
 from pyspark.sql import SparkSession
+
+log = logging.getLogger(__name__)
+
+CODEGEN_CACHE_CONF = "spark.sql.codegen.cache.maxEntries"
+# Sizing rationale and sweep numbers: the comment at its .config below.
+CODEGEN_CACHE_ENTRIES = 4000
 
 
 def get_spark(
@@ -81,10 +88,48 @@ def get_spark(
             "spark.cleaner.periodicGC.interval",
             os.environ.get("TSP_SPARK_PERIODIC_GC", "2min"),
         )
+        # Spark caches compiled generated classes (whole-stage and
+        # expression codegen) in one JVM-wide LRU of 100 entries by
+        # default, and a CEP job generates 20-200 classes: at 100 every
+        # job recompiled nearly all of its code with Janino on the
+        # driver, even a re-run of the job before it. Measured sweep
+        # (local[4], docs/SCALE.md "Generated-code cache"): the 12-job
+        # golden slate thrashes at 100 and 300 entries (45.6 / 30.0
+        # compiles per warm job) and fits from 600 up; the whole 106-job
+        # golden corpus holds ~1,730 distinct classes and the 7-pattern
+        # flagship ~155-195 more; the flagship re-run recompiles 181
+        # classes at 100 and 0 from 300 up. 4000 holds corpus + flagship
+        # with ~2x headroom. perfbench golden_jobs job p50: 0.86 -> 0.47 s
+        # (10 pairs, local[4]). Static conf: it must be set before the
+        # session starts (see the warning below).
+        .config(CODEGEN_CACHE_CONF, str(CODEGEN_CACHE_ENTRIES))
+        # The codegen cache keys on the generated source, and by default
+        # each whole-stage class is named after its codegen stage id.
+        # AQE numbers the stages it re-plans in the order their inputs
+        # finish, so an identical re-run could get other names and
+        # recompile: the 10-pattern golden job recompiled 0-8 of its
+        # ~250 classes per re-run, nondeterministically. Without the id
+        # in the name re-runs compiled 0 in every trial, and the first
+        # run 242 instead of 264 (stages alike but for their id share a
+        # class). Only the class names in stack traces lose the id; plan
+        # explains still show it.
+        .config("spark.sql.codegen.useIdInClassName", "false")
         .config("spark.ui.enabled", "false")
     )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
+    # getOrCreate hands back an already-running session unchanged in its
+    # static confs (a driver that built a plain session first): say so
+    # when that leaves the generated-code cache smaller than sized above
+    live = int(spark.conf.get(CODEGEN_CACHE_CONF))
+    if live < CODEGEN_CACHE_ENTRIES:
+        log.warning(
+            "%s is %d in the running Spark session, below the %d this "
+            "engine is sized for; every job will recompile most of its "
+            "generated code. Set it before the session starts (e.g. in "
+            "spark-defaults.conf).",
+            CODEGEN_CACHE_CONF, live, CODEGEN_CACHE_ENTRIES,
+        )
     return spark
