@@ -6,6 +6,8 @@ import io
 import json
 import time
 
+import pytest
+
 from tsp_spark.service import (
     JobQueueService,
     make_spark_runner,
@@ -15,7 +17,8 @@ from tsp_spark.service import (
 
 
 def wsgi_call(app, method, path, body=None):
-    payload = json.dumps(body or {}).encode()
+    """``body`` is JSON-encoded, except raw ``bytes`` which go as-is."""
+    payload = body if isinstance(body, bytes) else json.dumps(body or {}).encode()
     status_headers = {}
 
     def start_response(code, headers):
@@ -231,6 +234,31 @@ def test_validate_accepts_bare_json_array():
         svc.shutdown()
 
 
+@pytest.mark.parametrize(
+    "path, body",
+    [
+        ("/job/submit", b'{"patterns": [}'),
+        ("/job/submit", b"[]"),
+        ("/job/submit", b'{"priority": "high"}'),
+        ("/job/submit", b'{"priority": 1.5}'),
+        ("/patterns/validate", b'["x > 5"]'),
+        ("/patterns/validate", b'{"patterns": "x"}'),
+    ],
+)
+def test_malformed_body_is_400(path, body):
+    """Unparseable JSON, a non-object submit body, a non-integer
+    priority and non-object pattern entries answer 400 with an error
+    message, and nothing is queued."""
+    svc = JobQueueService(runner=lambda req: 0, dequeue_interval_s=60)
+    try:
+        code, out = wsgi_call(make_wsgi_app(svc), "POST", path, body)
+        assert code == "400 Bad Request", (code, out)
+        assert out["error"]
+        assert svc.queue_show() == []
+    finally:
+        svc.shutdown()
+
+
 def test_submit_same_uuid_is_idempotent_while_live():
     """r6d (review-caught): re-POSTing an in-flight uuid used to
     enqueue the uid twice (the worker ran the job twice) and clobber
@@ -315,7 +343,6 @@ def test_unsupported_sink_conf_fails_loudly(spark, tmp_path):
     """r6d (review-caught): a declared sink the runner can't express
     must fail the job, not silently drop the data while reporting
     'finished'."""
-    import pytest
 
     from tsp_spark.service import make_spark_runner
 
@@ -345,8 +372,6 @@ def test_and_then_mode_selectable_per_job(spark, tmp_path):
     docs/SEMANTICS.md §17), exact mode merges through the union+rewind
     consumption while the fused default pairs earliest-B-per-A."""
     import datetime as dt
-
-    import pytest
 
     rows = []
     for i in range(15):

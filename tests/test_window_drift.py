@@ -27,7 +27,7 @@ association legitimately rounds to either side; measured 999 and 499
 tie-flips respectively in earlier designs of this test and
 tools/fuzz_window_drift.py.)
 
-sf1 evidence for the engine path: tools/repro_prefix_drift_sf1.py —
+sf1 evidence for the engine path (recorded in docs/SCALE.md r14):
 frame / prefix / auto / DuckDB all agree at 84,213 after the fix.
 """
 from __future__ import annotations

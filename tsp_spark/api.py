@@ -141,8 +141,9 @@ def is_row_local(node) -> bool:
 def _is_shardable_timer(node) -> bool:
     """A bare Timer whose inner condition is row-local: the simplest
     stateful shape whose lookback is provably bounded (window+max_gap);
-    eligible for ops.islands.timer_islands_sharded. Kept for direct
-    callers — search_incidents routes through the more general
+    eligible for ops.islands.timer_islands_sharded. search_incidents
+    uses it both for auto-shard eligibility and to route such patterns
+    to that hand-written kernel; other stateful shapes go through
     _shardable_extents_ms."""
     from tsp_spark.dsl import ast as A
 

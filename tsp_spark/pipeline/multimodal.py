@@ -1,18 +1,14 @@
 """Multimodal column plumbing: image/audio/video as opaque binary columns
 with typed metadata structs, processed via Arrow-batched mapInPandas.
 
-Decode strategy (pipeline/codecs.py): PNG / baseline JPEG / BMP / PPM
-images and PCM WAV audio are decoded FOR REAL in pure stdlib + numpy —
-bit-exact pixel and sample recovery (JPEG within codec tolerance), real
-gradient/spectral features, real resampling, real PNG re-encode; MP3
-rate/duration come from a real frame-header parse; MJPEG AVI video
-containers parse (RIFF hdrl walk) and frame-decode for real through
-pipeline/jpeg.py. Only what genuinely needs an external codec
-(MP3 sample synthesis, non-MJPEG video codecs) falls
-back to the deterministic stub (`_fake_decode_*`, clearly marked) so
-the pipeline stays end-to-end runnable in this container; swap the
-fallback for Pillow/libsndfile/ffmpeg in production via the same code
-path.
+Decode strategy: no media is decoded. Every operator derives its
+metadata and feature vectors from the payload bytes alone through the
+deterministic stubs (`_fake_decode_*`, clearly marked), so results are
+reproducible and the gated `multimodal_features` query can be
+value-checked against a DuckDB replica of the stub. A real decoder
+(Pillow/libsndfile/ffmpeg) would replace the stub call inside the same
+`mapInPandas` batch functions; the schemas and id handling stay as they
+are.
 
 Scale notes: binary payloads stay columnar (never hit the driver);
 mapInPandas streams Arrow batches so one task holds only
@@ -30,26 +26,6 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
-
-from tsp_spark.pipeline.codecs import (
-    UnsupportedMediaError,
-    decode_image,
-    decode_mp2,
-    decode_wav,
-    encode_png,
-    image_features,
-    mfcc_like,
-    parse_mp3_headers,
-    resize_nearest,
-)
-
-IMAGE_META_SCHEMA = T.StructType(
-    [
-        T.StructField("width", T.IntegerType()),
-        T.StructField("height", T.IntegerType()),
-        T.StructField("format", T.StringType()),
-    ]
-)
 
 IMAGE_FEATURES_SCHEMA = T.StructType(
     [
@@ -73,10 +49,9 @@ def _id_schema(df: DataFrame, id_col: str, *rest: T.StructField) -> T.StructType
 
 
 def _fake_decode_image(payload: bytes) -> tuple[int, int, list[float]]:
-    """STUB fallback — deterministic fake for formats needing an
-    external codec (arithmetic-coded JPEG, WebP…) and for corrupt payloads.
-    Produces (width, height, 8-dim vector) purely from the byte content
-    so tests are reproducible."""
+    """STUB — deterministic fake image decode. Produces (width, height,
+    8-dim vector) purely from the byte content so results are
+    reproducible."""
     n = len(payload)
     w = 16 + (n % 64)
     h = 16 + ((n // 64) % 64)
@@ -84,28 +59,18 @@ def _fake_decode_image(payload: bytes) -> tuple[int, int, list[float]]:
     return w, h, feats
 
 
-def _decode_image_any(data: bytes) -> tuple[int, int, list[float]]:
-    """Real decode (PNG/BMP/PPM: pixels + gradient statistics) with the
-    declared stub as the unsupported-format fallback."""
-    try:
-        _fmt, img = decode_image(data)
-        return img.shape[1], img.shape[0], image_features(img)
-    except UnsupportedMediaError:
-        return _fake_decode_image(data)
-
-
 def extract_image_features(
     df: DataFrame, payload_col: str = "payload", id_col: str = "media_id"
 ) -> DataFrame:
-    """Decode + featurize binary image payloads via Arrow-batched
-    mapInPandas (real decode for PNG/BMP/PPM, see module docstring)."""
+    """Featurize binary image payloads via Arrow-batched mapInPandas
+    (deterministic stub, see module docstring)."""
 
     def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in it:
             rows = []
             for mid, payload in zip(pdf[id_col], pdf[payload_col]):
                 data = bytes(payload) if payload is not None else b""
-                w, h, feats = _decode_image_any(data)
+                w, h, feats = _fake_decode_image(data)
                 rows.append((mid, w, h, len(data), feats))
             yield pd.DataFrame(
                 rows, columns=[id_col, "width", "height", "n_bytes", "features"]
@@ -126,9 +91,9 @@ AUDIO_FEATURES_SCHEMA = T.StructType(
 
 
 def _fake_decode_audio(payload: bytes) -> tuple[int, int, list[float]]:
-    """STUB fallback — deterministic fake for formats needing an
-    external codec (MP3/OGG…). Returns (sample_rate, duration_ms,
-    13-dim MFCC-shaped vector) derived purely from the bytes."""
+    """STUB — deterministic fake audio decode. Returns (sample_rate,
+    duration_ms, 13-dim MFCC-shaped vector) derived purely from the
+    bytes."""
     n = len(payload)
     sr = 16000 if n % 2 == 0 else 44100
     duration_ms = n * 1000 // max(sr // 1000, 1) // 8
@@ -136,45 +101,18 @@ def _fake_decode_audio(payload: bytes) -> tuple[int, int, list[float]]:
     return sr, duration_ms, mfcc
 
 
-def _decode_audio_any(data: bytes) -> tuple[int, int, list[float]]:
-    """Real decode (PCM WAV and MPEG-1 Layer II: samples + mel/DCT
-    spectral features; Layer I/III: REAL frame-header parse → sample
-    rate/duration, synthesis stubbed) with the declared stub as the
-    unsupported-format fallback."""
-    try:
-        sr, x = decode_wav(data)
-        return sr, int(x.size * 1000 / max(sr, 1)), mfcc_like(x, sr)
-    except UnsupportedMediaError:
-        pass
-    try:
-        # REAL Layer II sample synthesis (r8, codecs.decode_mp2):
-        # subband dequantization + pseudo-QMF filterbank
-        sr, x = decode_mp2(data)
-        return sr, int(x.size * 1000 / max(sr, 1)), mfcc_like(x, sr)
-    except UnsupportedMediaError:
-        pass
-    try:
-        # Layer I/III: header-only parse — rate and duration are real;
-        # the spectral features would need Huffman/IMDCT synthesis,
-        # which stays behind the declared deterministic stub
-        sr, duration_ms, _kbps, _n = parse_mp3_headers(data)
-        return sr, duration_ms, _fake_decode_audio(data)[2]
-    except UnsupportedMediaError:
-        return _fake_decode_audio(data)
-
-
 def extract_audio_features(
     df: DataFrame, payload_col: str = "payload", id_col: str = "media_id"
 ) -> DataFrame:
-    """Decode + featurize binary audio payloads via Arrow-batched
-    mapInPandas (real decode for PCM WAV, see module docstring)."""
+    """Featurize binary audio payloads via Arrow-batched mapInPandas
+    (deterministic stub, see module docstring)."""
 
     def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in it:
             rows = []
             for mid, payload in zip(pdf[id_col], pdf[payload_col]):
                 data = bytes(payload) if payload is not None else b""
-                sr, dur, mfcc = _decode_audio_any(data)
+                sr, dur, mfcc = _fake_decode_audio(data)
                 rows.append((mid, sr, dur, mfcc))
             yield pd.DataFrame(
                 rows, columns=[id_col, "sample_rate", "duration_ms", "mfcc"]
@@ -202,10 +140,8 @@ def resize_images(
     id_col: str = "media_id",
 ) -> DataFrame:
     """Resize: binary in → binary out, one row per image, via
-    mapInPandas. Decodable payloads (PNG/BMP/PPM) get a REAL
-    nearest-neighbor resample and are re-encoded as PNG; unsupported
-    formats keep the deterministic truncate/pad stub so the pipeline
-    never fails mid-stream on a bad payload."""
+    mapInPandas. STUB: the payload is repeated, then truncated or
+    zero-padded to ``target_w * target_h`` bytes."""
 
     def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         target = target_w * target_h
@@ -213,13 +149,9 @@ def resize_images(
             rows = []
             for mid, payload in zip(pdf[id_col], pdf[payload_col]):
                 data = bytes(payload) if payload is not None else b""
-                try:
-                    _fmt, img = decode_image(data)
-                    out = encode_png(resize_nearest(img, target_w, target_h))
-                except UnsupportedMediaError:
-                    out = (data * (target // max(len(data), 1) + 1))[:target].ljust(
-                        target, b"\x00"
-                    )
+                out = (data * (target // max(len(data), 1) + 1))[:target].ljust(
+                    target, b"\x00"
+                )
                 rows.append((mid, target_w, target_h, out))
             yield pd.DataFrame(
                 rows, columns=[id_col, "width", "height", "payload"]
@@ -236,30 +168,15 @@ def frame_sample_plan(
     every_n: int = 10,
 ) -> DataFrame:
     """Video frame-sampling plumbing: one output row per sampled frame
-    index. AVI payloads get their REAL container frame count
-    (codecs.parse_avi_headers walks the RIFF hdrl); anything else keeps
-    the deterministic payload-length stub so the plan never fails on a
-    bad payload."""
-    # Preserve the caller's id column: same name, same Spark type.
-    meta_schema = T.StructType(
-        [
-            T.StructField(id_col, df.schema[id_col].dataType),
-            T.StructField("n_frames", T.IntegerType()),
-        ]
-    )
+    index. STUB: the frame count is ``len(payload) % 256 + 1``."""
+    meta_schema = _id_schema(df, id_col, T.StructField("n_frames", T.IntegerType()))
 
     def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from tsp_spark.pipeline.codecs import parse_avi_headers
-
         for pdf in it:
             rows = []
             for mid, payload in zip(pdf[id_col], pdf[payload_col]):
                 data = bytes(payload) if payload is not None else b""
-                try:
-                    n = max(int(parse_avi_headers(data)["n_frames"]), 1)
-                except UnsupportedMediaError:
-                    n = len(data) % 256 + 1  # STUB fallback
-                rows.append((mid, n))
+                rows.append((mid, len(data) % 256 + 1))
             yield pd.DataFrame(rows, columns=[id_col, "n_frames"])
 
     meta = df.select(id_col, payload_col).mapInPandas(batches, meta_schema)
@@ -272,22 +189,16 @@ def frame_sample_plan(
     )
 
 
-def _video_features_schema(id_field: T.StructField) -> T.StructType:
-    return T.StructType(
-        [
-            id_field,
-            T.StructField("width", T.IntegerType()),
-            T.StructField("height", T.IntegerType()),
-            T.StructField("n_frames", T.IntegerType()),
-            T.StructField("fps_milli", T.IntegerType()),
-            T.StructField("fourcc", T.StringType()),
-            T.StructField("features", T.ArrayType(T.FloatType())),
-        ]
-    )
-
-
-VIDEO_FEATURES_SCHEMA = _video_features_schema(
-    T.StructField("media_id", T.LongType())
+VIDEO_FEATURES_SCHEMA = T.StructType(
+    [
+        T.StructField("media_id", T.LongType()),
+        T.StructField("width", T.IntegerType()),
+        T.StructField("height", T.IntegerType()),
+        T.StructField("n_frames", T.IntegerType()),
+        T.StructField("fps_milli", T.IntegerType()),
+        T.StructField("fourcc", T.StringType()),
+        T.StructField("features", T.ArrayType(T.FloatType())),
+    ]
 )
 
 
@@ -297,53 +208,19 @@ def extract_video_features(
     id_col: str = "media_id",
     sample_frames: int = 2,
 ) -> DataFrame:
-    """Video metadata + first-frames features via Arrow-batched
-    mapInPandas. MJPEG AVIs decode FOR REAL (RIFF walk →
-    pipeline/jpeg.py per frame → per-frame image_features averaged over
-    the first ``sample_frames``); AVIs with other codecs return real
-    container metadata with the stub feature vector; non-AVI payloads
-    fall back to the deterministic image stub entirely."""
+    """Video metadata + features via Arrow-batched mapInPandas. STUB:
+    width, height and the feature vector come from the image stub,
+    ``n_frames`` is ``len(payload) % 256 + 1``, ``fps_milli`` is 0 and
+    ``fourcc`` is empty. ``sample_frames`` is accepted for API stability
+    and unused."""
 
     def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as np
-
-        from tsp_spark.pipeline.codecs import (
-            decode_avi_frames,
-            image_features,
-            parse_avi_headers,
-        )
-
         for pdf in it:
             rows = []
             for mid, payload in zip(pdf[id_col], pdf[payload_col]):
                 data = bytes(payload) if payload is not None else b""
-                try:
-                    meta, frames = decode_avi_frames(data, sample_frames)
-                    if not frames:
-                        # An MJPEG AVI with an empty movi list: np.mean over
-                        # zero frames would be a scalar NaN, not a vector —
-                        # degrade to the metadata+stub route instead.
-                        raise UnsupportedMediaError("no decodable frames")
-                    feats = [image_features(f) for f in frames]
-                    fv = [float(x) for x in np.mean(feats, axis=0)]
-                except UnsupportedMediaError:
-                    try:
-                        meta = parse_avi_headers(data)
-                        fv = _fake_decode_image(data)[2]
-                    except UnsupportedMediaError:
-                        w, h, fv = _fake_decode_image(data)
-                        meta = {
-                            "width": w, "height": h,
-                            "n_frames": len(data) % 256 + 1,
-                            "fps_milli": 0, "fourcc": "",
-                        }
-                rows.append(
-                    (
-                        mid, meta["width"], meta["height"],
-                        meta["n_frames"], meta.get("fps_milli", 0),
-                        meta.get("fourcc", ""), fv,
-                    )
-                )
+                w, h, fv = _fake_decode_image(data)
+                rows.append((mid, w, h, len(data) % 256 + 1, 0, "", fv))
             yield pd.DataFrame(
                 rows,
                 columns=[
@@ -352,7 +229,5 @@ def extract_video_features(
                 ],
             )
 
-    schema = _video_features_schema(
-        T.StructField(id_col, df.schema[id_col].dataType)
-    )
+    schema = _id_schema(df, id_col, *VIDEO_FEATURES_SCHEMA.fields[1:])
     return df.select(id_col, payload_col).mapInPandas(batches, schema)

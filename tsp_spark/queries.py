@@ -2284,13 +2284,11 @@ SELECT 'lsh' AS variant, * FROM ({ORACLE_ANN_LSH})
 
 def q_multimodal_features(spark, sf_dir):
     """Binary-column plumbing through the Arrow mapInPandas feature
-    extractor: document text bytes are NOT a decodable image, so this
-    exercises the deterministic stub-fallback path (real codecs are
-    covered by tests/test_codecs.py on genuine PNG/WAV payloads). The
-    fallback is pure byte arithmetic, so even the Python-side
-    mapInPandas output is value-checked against a DuckDB oracle —
-    features land as scalar columns (array columns don't sort in the
-    gate's comparator)."""
+    extractor, which runs the deterministic decode stub (no media is
+    decoded; see pipeline/multimodal.py). The stub is pure byte
+    arithmetic, so even the Python-side mapInPandas output is
+    value-checked against a DuckDB oracle — features land as scalar
+    columns (array columns don't sort in the gate's comparator)."""
     from tsp_spark.pipeline.multimodal import extract_image_features
 
     docs = _load(spark, sf_dir, "documents").select(

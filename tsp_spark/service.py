@@ -41,11 +41,17 @@ from tsp_spark.dsl.parser import ParseError, parse_pattern
 JobRunner = Callable[[dict], Any]
 
 
+class BadRequest(ValueError):
+    """A request the service cannot act on; the WSGI layer answers 400."""
+
+
 def validate_patterns(
     patterns: list[dict], fields_types: dict[str, str] | None = None
 ) -> list[dict]:
     """PatternsValidator parity (ValidationRoutes.scala:20-38): per
     pattern → success + metadata, or the parse error."""
+    if not isinstance(patterns, list) or not all(isinstance(p, dict) for p in patterns):
+        raise BadRequest("patterns must be a list of objects")
     out = []
     for p in patterns:
         pid = p.get("id")
@@ -170,8 +176,12 @@ class JobQueueService:
 
     # -- queue operations ------------------------------------------------
     def submit(self, request: dict) -> dict:
+        if not isinstance(request, dict):
+            raise BadRequest("request body must be a JSON object")
+        priority = request.get("priority", 0)
+        if type(priority) is not int:  # rejects bool, float and str
+            raise BadRequest(f"priority must be an integer, got {priority!r}")
         uid = request.get("uuid") or str(uuidlib.uuid4())
-        priority = int(request.get("priority", 0))
         with self._lock:
             # idempotent resubmit (review-caught): re-POSTing an
             # in-flight uuid used to enqueue the SAME uid twice (the
@@ -491,12 +501,12 @@ def make_wsgi_app(service: JobQueueService, fields_types: dict[str, str] | None 
             start_response(code, [("Content-Type", "application/json")])
             return [body]
 
-        def read_body() -> dict:
+        def read_body():
             try:
                 n = int(environ.get("CONTENT_LENGTH") or 0)
                 return json.loads(environ["wsgi.input"].read(n) or b"{}")
-            except (ValueError, json.JSONDecodeError):
-                return {}
+            except ValueError as e:  # bad length, JSON or UTF-8
+                raise BadRequest(f"malformed request body: {e}") from e
 
         try:
             if method == "POST" and segs[:2] == ["job", "submit"]:
@@ -519,18 +529,15 @@ def make_wsgi_app(service: JobQueueService, fields_types: dict[str, str] | None 
                 return respond("200 OK", service.overview())
             if method == "POST" and segs == ["patterns", "validate"]:
                 body = read_body()
-                # a bare JSON array body is valid (review-caught:
-                # list.get crashed with 500 before the isinstance
-                # fallback could apply)
-                pats = (
-                    body
-                    if isinstance(body, list)
-                    else body.get("patterns", [])
-                )
+                # a bare JSON array body is valid; anything that is not
+                # a list of objects is a 400 from validate_patterns
+                pats = body.get("patterns", []) if isinstance(body, dict) else body
                 return respond("200 OK", validate_patterns(pats, fields_types))
             if method == "GET" and segs == ["metainfo", "getVersion"]:
                 return respond("200 OK", {"version": ENGINE_VERSION})
             return respond("404 Not Found", {"error": f"no route {method} /{path}"})
+        except BadRequest as e:
+            return respond("400 Bad Request", {"error": str(e)})
         except Exception as e:  # noqa: BLE001
             return respond("500 Internal Server Error", {"error": str(e)})
 
