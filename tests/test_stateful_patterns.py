@@ -12,14 +12,18 @@ open runs plus a pruned pending set.
 from __future__ import annotations
 
 import shutil
+import sys
 import tempfile
 import time
+from pathlib import Path
 
 import pytest
 from pyspark.sql import functions as F
 
 from tsp_spark.compile.compiler import compile_pattern
 from tsp_spark.streaming.stateful import stateful_andthen, stateful_timer
+
+sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
 
 GAP_MS = 15_000
 
@@ -113,12 +117,32 @@ def test_stateful_pattern_routing(spark, events_small, tmp_path):
     )
     assert out.isStreaming
     # a pending lag nested inside another lag's lookback runs in-kernel
-    # too (r6c, speculative branch forking) — the kernel is total over
-    # the pattern grammar
+    # too (r6c, speculative branch forking)
     out = stateful_pattern(
         stream, "lag(lag(value, 5 sec), 10 sec) > 150", ["user_id"], "ts", ft
     )
     assert out.isStreaming
+
+
+@pytest.mark.parametrize("config", ["core", "ivolga"])
+def test_build_spec_golden_corpus_builds_or_routes(spark, config):
+    """Every golden pattern either builds a kernel spec or is routed out
+    with build_spec's documented ValueError (never a raw Spark error)."""
+    from tools import check_golden as G
+    from tsp_spark.streaming.stateful import build_spec
+
+    loader, corpus = G.CONFIGS[config]
+    df, keys, fields = loader(spark)
+    empty = spark.createDataFrame([], df.schema)
+    pats, _, _ = G.golden(corpus)
+    routed = []
+    for p in pats:
+        try:
+            build_spec(empty, p["sourceCode"], keys, "ts", fields, 60_000)
+        except ValueError as e:
+            assert "carry-buffer streaming mode" in str(e), (p["id"], e)
+            routed.append(int(p["id"]))
+    assert len(routed) < len(pats)
 
 
 def test_stateful_incidents_union(spark, events_small, tmp_path):

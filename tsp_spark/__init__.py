@@ -14,3 +14,9 @@ no Python row UDFs on the hot path.
 __version__ = "0.1.0"
 
 from tsp_spark.session import get_spark  # noqa: F401
+from tsp_spark.zipimport_guard import install_zip_refresh_guard
+
+# A Spark Python worker imports this package when it unpickles a kernel
+# or UDF of the engine; from then on its per-task setup stops re-reading
+# pyspark.zip (no-op on the driver; see zipimport_guard).
+install_zip_refresh_guard()

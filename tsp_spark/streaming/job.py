@@ -321,13 +321,15 @@ def stateful_incidents(stream: DataFrame, job: StreamingPatternJob) -> DataFrame
     stateful_multi) — Spark allows a single stateful operator per
     streaming query, and the reference's topology is the same: one
     keyed stream fanned into N per-key state machines. N patterns cost
-    one shuffle and one state store. The kernel is TOTAL over the
-    pattern grammar (windowed sub-expressions, lag — including lag
-    nested inside windowed aggregates AND inside another lag's
-    lookback, the latter via speculative branch forking (r6c) — wait,
-    nested andThen all run as in-kernel condition programs); the
-    carry-buffer mode (``incidents_stream``) remains only as a
-    user-selectable fallback.
+    one shuffle and one state store. Windowed sub-expressions, lag
+    (including lag nested inside windowed aggregates and inside another
+    lag's lookback, the latter via speculative branch forking), wait and
+    nested andThen run as in-kernel condition programs. The kernel is
+    not total: ``build_spec`` raises a ValueError for the shapes it
+    cannot run, chiefly a ``for T`` timer or truth-stat under
+    ``andThen``, ``wait`` or a boolean combinator (its docstring lists
+    them), and such a job must use the carry-buffer mode
+    (``incidents_stream``).
 
     Scale contrast with the carry mode: no driver-coordinated per-batch
     loop, no history re-evaluation — state is O(open runs) per key.

@@ -574,41 +574,21 @@ _EVAL_FNS = (
 _LAG_KIND = "lag"
 
 
-def _contains_agg(node) -> bool:
-    """Does any AggregateCall appear anywhere under ``node``? Generic
+def _contains(node, types) -> bool:
+    """Does a node of ``types`` appear anywhere under ``node``? Generic
     dataclass walk — used for routing only (never raises)."""
     import dataclasses
 
     from tsp_spark.dsl import ast as A
 
-    if isinstance(node, A.AggregateCall):
+    if isinstance(node, types):
         return True
     if not dataclasses.is_dataclass(node):
         return False
     for f in dataclasses.fields(node):
         v = getattr(node, f.name)
         for x in v if isinstance(v, tuple) else (v,):
-            if isinstance(x, A.Node) and _contains_agg(x):
-                return True
-    return False
-
-
-def _contains_pending_shape(node) -> bool:
-    """Any Wait or AndThen under ``node``? Those need pending-capable
-    cond programs (_WaitProgram / _SeqBoolProgram), composed through
-    _ComboProgram when they sit under boolean combinators."""
-    import dataclasses
-
-    from tsp_spark.dsl import ast as A
-
-    if isinstance(node, (A.Wait, A.AndThen)):
-        return True
-    if not dataclasses.is_dataclass(node):
-        return False
-    for f in dataclasses.fields(node):
-        v = getattr(node, f.name)
-        for x in v if isinstance(v, tuple) else (v,):
-            if isinstance(x, A.Node) and _contains_pending_shape(x):
+            if isinstance(x, A.Node) and _contains(x, types):
                 return True
     return False
 
@@ -3519,9 +3499,15 @@ def build_spec(
     — runs incrementally too (r6c): the program state forks into
     speculative bridge/absent branches while the inner span is open
     and joins at its next emission (see _WindowedCondProgram._fork_terms).
-    The kernel is TOTAL over the pattern grammar; the carry-buffer
-    mode (streaming/job.py) remains only as a user-selectable
-    fallback."""
+    The kernel is not total over the pattern grammar. These shapes
+    raise a ValueError that routes them to the carry-buffer mode
+    (streaming/job.py): a ``for T`` timer or ``for T <op> …`` truth-stat
+    under ``andThen``, ``wait`` or a boolean combinator (e.g. ``x > 600
+    for 2 sec andThen x < 600``), including a timer over a windowed
+    aggregate ("Timer
+    inside a windowed boolean"); a function or aggregate kind the
+    in-kernel evaluator lacks inside a windowed boolean; and any other
+    sub-expression whose batch form needs a window."""
     from tsp_spark.compile.compiler import PatternCompiler
     from tsp_spark.dsl import ast as A
     from tsp_spark.dsl.parser import parse_pattern
@@ -3570,20 +3556,30 @@ def build_spec(
             # andThen in a boolean context: interval-membership
             # semantics (the batch _compile_andthen_bool semi-join)
             return _SeqBoolProgram([cond_source(c) for c in flatten_chain(nw)])
-        if isinstance(nw, A.Until) and (
-            _contains_pending_shape(nw) or _contains_agg(nw)
-        ):
+        # Wait and AndThen need pending-capable programs, composed
+        # through _ComboProgram under boolean combinators
+        pending = (A.Wait, A.AndThen)
+        if isinstance(nw, A.Until) and _contains(nw, (*pending, A.AggregateCall)):
             return _ComboProgram(
                 "until", [cond_source(nw.left), cond_source(nw.right)]
             )
         if (
             isinstance(nw, A.FunctionCall)
             and nw.name in ("and", "or", "xor", "not")
-            and _contains_pending_shape(nw)
+            and _contains(nw, pending)
         ):
             return _ComboProgram(nw.name, [cond_source(a) for a in nw.args])
-        if _contains_agg(n):
+        if _contains(n, A.AggregateCall):
             return _WindowedCondProgram(n)
+        if _contains(nw, (A.Timer, A.ForWithInterval)):
+            # a `for T` shape below the top level (under andThen, wait
+            # or a boolean combinator) has no condition program yet;
+            # its batch form needs the batch-only series column
+            raise ValueError(
+                "a `for T` condition under andThen, wait or a boolean "
+                "combinator is not supported by the incremental kernel "
+                "— use the carry-buffer streaming mode (streaming/job.py)"
+            )
         c = comp.compile_bool(stream, n)
         if c.has_window or c.present is not None or c.df is not stream:
             raise ValueError(
