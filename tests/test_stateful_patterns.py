@@ -586,9 +586,44 @@ def test_stateful_truth_duration_matches_batch(spark, events_small, mk_ts):
     assert got <= batch, f"spurious {sorted(got - batch)[:5]}"
 
 
+CHECKPOINT_MANAGER_CONF = "spark.sql.streaming.checkpointFileManagerClass"
+CHECKPOINTING_PKG = "org.apache.spark.sql.execution.streaming.checkpointing."
+
+
+def test_checkpoint_file_manager_is_filesystem_based(spark, tmp_path):
+    """get_spark makes streaming checkpoints go through Hadoop's
+    FileSystem API (no chmod/readlink child process per file without
+    the native Hadoop library), and a non-overwriting write of an
+    existing checkpoint file still fails and keeps the first content."""
+    jvm = spark._jvm
+    target = tmp_path / "offsets" / "0"
+    path = jvm.org.apache.hadoop.fs.Path(str(target))
+    manager = jvm.org.apache.spark.sql.execution.streaming.checkpointing \
+        .CheckpointFileManager.create(
+            path, spark._jsparkSession.sessionState().newHadoopConf()
+        )
+    assert manager.getClass().getName() == (
+        CHECKPOINTING_PKG + "FileSystemBasedCheckpointFileManager"
+    )
+
+    first = manager.createAtomic(path, False)
+    first.write(bytearray(b"first"))
+    first.close()
+    second = manager.createAtomic(path, False)
+    second.write(bytearray(b"second"))
+    with pytest.raises(Exception, match="FileAlreadyExists"):
+        second.close()
+    assert target.read_bytes() == b"first"
+
+
 @pytest.mark.slow
+@pytest.mark.parametrize(
+    "first_manager",
+    [CHECKPOINTING_PKG + "FileContextBasedCheckpointFileManager", None],
+    ids=["spark_default", "engine_default"],
+)
 def test_stateful_checkpoint_kill_and_resume_matches_batch(
-    spark, events_small, mk_ts, tmp_path
+    spark, events_small, mk_ts, tmp_path, first_manager
 ):
     """Resume-from-checkpoint parity (the reference proves this via
     CheckpointingService.scala:12-168): run the stateful kernel over a
@@ -596,7 +631,9 @@ def test_stateful_checkpoint_kill_and_resume_matches_batch(
     while per-key state holds open runs (the cut at t=70s lands inside
     every user's >150 stretch), restart from the same checkpoint dir,
     and assert the union of emitted incidents equals the batch plan —
-    no losses, no duplicates."""
+    no losses, no duplicates. The first leg writes its checkpoint with
+    ``first_manager`` (None: the engine's default), so a checkpoint left
+    by Spark's FileContext-based default resumes under the engine's."""
     from tsp_spark.streaming.stateful import stateful_pattern
 
     pat = "value > 150 for 10 sec"
@@ -633,9 +670,14 @@ def test_stateful_checkpoint_kill_and_resume_matches_batch(
             .start()
         )
 
-    q = start()
-    q.processAllAvailable()
-    q.stop()  # the kill: open runs + watermark live only in the checkpoint
+    engine_manager = spark.conf.get(CHECKPOINT_MANAGER_CONF)
+    spark.conf.set(CHECKPOINT_MANAGER_CONF, first_manager or engine_manager)
+    try:
+        q = start()
+        q.processAllAvailable()
+        q.stop()  # the kill: open runs + watermark live only in the checkpoint
+    finally:
+        spark.conf.set(CHECKPOINT_MANAGER_CONF, engine_manager)
 
     events_small.where(F.col("ts") >= cut).coalesce(1).write.parquet(f"{src}/b1")
     flush = spark.createDataFrame(

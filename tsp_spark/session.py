@@ -114,6 +114,29 @@ def get_spark(
         # class). Only the class names in stack traces lose the id; plan
         # explains still show it.
         .config("spark.sql.codegen.useIdInClassName", "false")
+        # Streaming checkpoint files (offset and commit logs, state store
+        # deltas, their .crc files) go through Hadoop's FileSystem API,
+        # not Spark's FileContext default. Without the native Hadoop
+        # library the local file system starts a child process for
+        # setPermission (chmod) and for link-status checks (readlink), and
+        # the FileContext manager does both for every file: 27.6 ms per
+        # file against 7.1 ms here, 447 against 106 PIDs taken per
+        # stream_replay drop, state commit 484 -> 16 ms per data batch
+        # (docs/SCALE.md "Checkpoint file writes"). The files written are
+        # the same. Trade: a write that must not overwrite (offset and
+        # commit logs) checks that the target does not exist and then
+        # renames, instead of one atomic rename-unless-exists. The rename
+        # is still atomic on a POSIX file system, so no reader sees a
+        # partial file, and a second write of an existing batch still
+        # fails and keeps the first content; lost is atomic detection of
+        # two drivers writing the same batch id into one checkpoint at
+        # the same moment. Spark falls back to this class itself on file
+        # systems without FileContext.
+        .config(
+            "spark.sql.streaming.checkpointFileManagerClass",
+            "org.apache.spark.sql.execution.streaming.checkpointing."
+            "FileSystemBasedCheckpointFileManager",
+        )
         .config("spark.ui.enabled", "false")
     )
     for k, v in (extra_conf or {}).items():
