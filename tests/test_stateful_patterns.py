@@ -588,6 +588,7 @@ def test_stateful_truth_duration_matches_batch(spark, events_small, mk_ts):
 
 CHECKPOINT_MANAGER_CONF = "spark.sql.streaming.checkpointFileManagerClass"
 CHECKPOINTING_PKG = "org.apache.spark.sql.execution.streaming.checkpointing."
+NO_DATA_BATCHES_CONF = "spark.sql.streaming.noDataMicroBatches.enabled"
 
 
 def test_checkpoint_file_manager_is_filesystem_based(spark, tmp_path):
@@ -616,14 +617,108 @@ def test_checkpoint_file_manager_is_filesystem_based(spark, tmp_path):
     assert target.read_bytes() == b"first"
 
 
+IDLE_DROPS = (
+    # key 1 opens a value > 150 run, then goes silent
+    [(1, t, 200.0) for t in range(10)] + [(2, t, 100.0) for t in range(10)],
+    # key 2 alone moves the watermark to 58 s, past key 1's last row
+    # (9 s) + GAP_MS: key 1's event-time timeout is due
+    [(2, t, 100.0) for t in range(10, 60)],
+    [(2, t, 100.0) for t in range(60, 70)],
+)
+
+
+@pytest.fixture(scope="module")
+def idle_key_replay(spark, mk_ts, tmp_path_factory):
+    """IDLE_DROPS landed one parquet file at a time through
+    ``stateful_incidents`` into a memory sink. Returns the sink's
+    (pattern_id, user_id, from_ts, to_ts) set after each drop, the
+    query's progress, and batch ``search_incidents`` over all rows."""
+    from tsp_spark.api import RawPattern, search_incidents
+    from tsp_spark.streaming.job import StreamingPatternJob, stateful_incidents
+
+    schema = "user_id bigint, ts timestamp, value double"
+    root = tmp_path_factory.mktemp("idle_key")
+    src, chk = root / "src", root / "chk"
+    src.mkdir()
+    pats = [RawPattern(1, "value > 150")]
+    ft = {"value": "float64"}
+    frames = [
+        spark.createDataFrame([(u, mk_ts(t), v) for u, t, v in rows], schema)
+        for rows in IDLE_DROPS
+    ]
+    stream = (
+        spark.readStream.schema(schema)
+        .option("maxFilesPerTrigger", "1")
+        .parquet(str(src / "*"))
+    )
+    job = StreamingPatternJob(
+        patterns=pats, keys=["user_id"], ts="ts", fields_types=ft,
+        events_max_gap_ms=GAP_MS, watermark_delay="1 second",
+    )
+    q = (
+        stateful_incidents(stream, job)
+        .writeStream.outputMode("append")
+        .format("memory")
+        .queryName("idle_key_close")
+        .option("checkpointLocation", str(chk))
+        .start()
+    )
+
+    def project(rows):
+        return {(r["pattern_id"], r["user_id"], r["from_ts"], r["to_ts"]) for r in rows}
+
+    after_drop = []
+    try:
+        for i, frame in enumerate(frames):
+            frame.coalesce(1).write.parquet(str(src / f"d{i}"))
+            q.processAllAvailable()
+            after_drop.append(project(spark.sql("SELECT * FROM idle_key_close").collect()))
+    finally:
+        q.stop()
+    whole = frames[0].unionAll(frames[1]).unionAll(frames[2])
+    batch = project(search_incidents(
+        whole, pats, ["user_id"], "ts", fields_types=ft, max_gap_ms=GAP_MS,
+    ).collect())
+    return after_drop, q.recentProgress, batch
+
+
+@pytest.mark.slow
+def test_stateful_idle_key_closes_by_timeout(idle_key_replay, mk_ts):
+    """A key that stops sending closes through the kernel's event-time
+    timeout, not a gap row: its open run is emitted once another key's
+    data moves the watermark past its last row + max gap, at the latest
+    with the data drop after that, and equals the batch search."""
+    after_drop, _, batch = idle_key_replay
+    assert batch == {(1, 1, mk_ts(0), mk_ts(9))}
+    assert after_drop[0] == set()  # the run is open while key 1 is live
+    assert after_drop[-1] == batch
+
+
+@pytest.mark.slow
+def test_stateful_drop_runs_one_micro_batch(idle_key_replay):
+    """get_spark turns off Spark's no-data micro-batch: each drop runs
+    exactly one micro-batch, even when it advances the watermark past a
+    pending timeout. Idle progress events (no addBatch) are not batches."""
+    _, progress, _ = idle_key_replay
+    batches = [p for p in progress if "addBatch" in p.durationMs]
+    assert [p.numInputRows for p in batches] == [len(rows) for rows in IDLE_DROPS]
+
+
 @pytest.mark.slow
 @pytest.mark.parametrize(
-    "first_manager",
-    [CHECKPOINTING_PKG + "FileContextBasedCheckpointFileManager", None],
+    "first_confs",
+    [
+        {
+            CHECKPOINT_MANAGER_CONF:
+                CHECKPOINTING_PKG + "FileContextBasedCheckpointFileManager",
+            NO_DATA_BATCHES_CONF: "true",
+        },
+        {},
+    ],
     ids=["spark_default", "engine_default"],
 )
 def test_stateful_checkpoint_kill_and_resume_matches_batch(
-    spark, events_small, mk_ts, tmp_path, first_manager
+    spark, events_small, mk_ts, tmp_path, first_confs
 ):
     """Resume-from-checkpoint parity (the reference proves this via
     CheckpointingService.scala:12-168): run the stateful kernel over a
@@ -632,8 +727,9 @@ def test_stateful_checkpoint_kill_and_resume_matches_batch(
     every user's >150 stretch), restart from the same checkpoint dir,
     and assert the union of emitted incidents equals the batch plan —
     no losses, no duplicates. The first leg writes its checkpoint with
-    ``first_manager`` (None: the engine's default), so a checkpoint left
-    by Spark's FileContext-based default resumes under the engine's."""
+    ``first_confs`` over the engine's session (empty: the engine's
+    defaults), so a checkpoint left by Spark's defaults (FileContext-based
+    manager, no-data micro-batches on) resumes under the engine's."""
     from tsp_spark.streaming.stateful import stateful_pattern
 
     pat = "value > 150 for 10 sec"
@@ -670,14 +766,16 @@ def test_stateful_checkpoint_kill_and_resume_matches_batch(
             .start()
         )
 
-    engine_manager = spark.conf.get(CHECKPOINT_MANAGER_CONF)
-    spark.conf.set(CHECKPOINT_MANAGER_CONF, first_manager or engine_manager)
+    engine_confs = {k: spark.conf.get(k) for k in first_confs}
+    for k, v in first_confs.items():
+        spark.conf.set(k, v)
     try:
         q = start()
         q.processAllAvailable()
         q.stop()  # the kill: open runs + watermark live only in the checkpoint
     finally:
-        spark.conf.set(CHECKPOINT_MANAGER_CONF, engine_manager)
+        for k, v in engine_confs.items():
+            spark.conf.set(k, v)
 
     events_small.where(F.col("ts") >= cut).coalesce(1).write.parquet(f"{src}/b1")
     flush = spark.createDataFrame(

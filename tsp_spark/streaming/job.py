@@ -337,6 +337,12 @@ def stateful_incidents(stream: DataFrame, job: StreamingPatternJob) -> DataFrame
     exactly as the carry mode's per-batch re-emits do: emitted rows are
     deterministic, so an at-least-once sink dedups on
     (pattern_id, keys, from_ts, to_ts).
+
+    A key that goes idle closes by event-time timeout (``stateful_multi``)
+    in the first data micro-batch after the watermark passes its last
+    row + ``events_max_gap_ms``: ``get_spark`` turns off Spark's empty
+    no-data micro-batch, so if the source stalls, closes that are due
+    wait for the next data.
     """
     from tsp_spark.streaming.stateful import build_spec, stateful_multi
 

@@ -2707,7 +2707,17 @@ def stateful_multi(
     """Run every spec's state machine over one keyed stream — a single
     applyInPandasWithState (Spark allows exactly one per query), one
     shuffle, one state store. Emits closed intervals:
-    (pattern_id, subunit, keys…, from_ts, to_ts, n_rows)."""
+    (pattern_id, subunit, keys…, from_ts, to_ts, n_rows).
+
+    Each key's event-time timeout is its last row + ``max_gap_ms``; when
+    it is due, the key closes (pending rows resolve absent, open runs
+    flush) and its state is removed. Spark runs that timed-out-state
+    pass in every micro-batch, against the watermark the batch before
+    advanced. ``get_spark`` turns off the empty no-data micro-batch that
+    would otherwise run it at once, so the close is emitted with the next
+    data batch: the same incidents, but if the source stalls, closes
+    that are due wait for the next data (docs/SCALE.md "No-data
+    micro-batches")."""
     key_fields = [stream.schema[k] for k in keys]
     out_schema = T.StructType(
         [
