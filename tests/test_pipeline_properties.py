@@ -2147,54 +2147,31 @@ def test_cosine_topk_query_size_guard(spark):
     assert forced.count() == 90
 
 
-def test_jaccard_prefix_table_materializes_once(spark):
-    """r14 (guide §2.2): the candidate self-join resolves as a
-    broadcast, so without materializing the prefix table BOTH join
-    sides re-run the whole prefix pipeline (explode → df groupBy →
-    row_number window → bucket-guard window). The final plan must read
-    the checkpointed table — no Window pass (row_number / guard) and
-    no token explode may survive downstream of the materialization."""
-    from tsp_spark.pipeline.dedup import jaccard_pairs
+def test_minhash_one_partition_input_is_not_shuffled_round_robin(
+    spark, monkeypatch
+):
+    """A one-partition input (a streaming near-dup micro-batch is one)
+    goes straight into the signature pipeline: no round-robin shuffle
+    up to the session's parallelism is planned ahead of it."""
+    from pyspark.sql.classic.dataframe import DataFrame
 
-    rows = [(i, "b", f"tok{i % 3} alpha beta gamma common") for i in range(8)]
-    df = spark.createDataFrame(rows, "doc_id long, src string, text string")
-    out = jaccard_pairs(df, "text", "doc_id", ["src"], threshold=0.6)
-    plan = out._jdf.queryExecution().executedPlan().toString()
-    assert "Scan ExistingRDD" in plan, plan
-    assert "windowspecdefinition" not in plan, plan
+    from tsp_spark.pipeline.dedup import minhash_lsh_pairs
 
+    # a checkpoint cuts its input's plan out of the final one, so the
+    # plan of every checkpointed frame is recorded too
+    plans = []
+    orig = DataFrame.localCheckpoint
 
-def test_cms_exact_table_materializes_once(spark):
-    """r14 (guide §2.2): cms_heavy_hitters reuses its exact per-item
-    count table three ways (counter build, candidate set, stream
-    total), and without materialization every consumer re-derived the
-    groupBy from the raw occurrences — the bench fold scanned and
-    tokenized the corpus 3×. The final plan must read only the
-    checkpointed table: no trace of the raw input source may survive
-    downstream."""
-    from tsp_spark.pipeline.sketches import cms_heavy_hitters
+    def spy(self, *args, **kwargs):
+        plans.append(self._jdf.queryExecution().executedPlan().toString())
+        return orig(self, *args, **kwargs)
 
-    rows = [(f"tok{i % 4}",) for i in range(40)]
-    df = spark.createDataFrame(rows, "item string")
-    out = cms_heavy_hitters(df, "item", inv_phi=50)
-    plan = out._jdf.queryExecution().executedPlan().toString()
-    assert "Scan ExistingRDD" in plan, plan
-    # the raw occurrence frame (a local relation here) must not be
-    # re-scanned by any of the three consumers
-    assert "LocalTableScan" not in plan, plan
-
-
-def test_simhash_banded_table_materializes_once(spark):
-    """r14 (guide §2.2): same shape as the jaccard prefix fix — the
-    band self-join broadcasts one side, so without materialization the
-    corpus-tokenize → per-bit-vote aggregate pipeline runs twice. The
-    final plan must join two reads of the checkpointed banded table:
-    no vote aggregation (shiftright sums) downstream."""
-    from tsp_spark.pipeline.dedup import simhash_pairs
-
-    rows = [(i, "alpha beta gamma delta epsilon zeta") for i in range(6)]
-    df = spark.createDataFrame(rows, "doc_id long, text string")
-    out = simhash_pairs(df, "text", "doc_id", bits=32, bands=4, max_hamming=3)
-    plan = out._jdf.queryExecution().executedPlan().toString()
-    assert "Scan ExistingRDD" in plan, plan
-    assert "shiftright" not in plan, plan
+    monkeypatch.setattr(DataFrame, "localCheckpoint", spy)
+    # a range source, not createDataFrame: its size estimate is small
+    df = spark.range(8).selectExpr(
+        "id AS doc_id", "concat('tok', id % 3, ' alpha beta gamma') AS text"
+    ).coalesce(1)
+    out = minhash_lsh_pairs(df, "text", "doc_id")
+    plans.append(out._jdf.queryExecution().executedPlan().toString())
+    for plan in plans:
+        assert "RoundRobinPartitioning" not in plan, plan

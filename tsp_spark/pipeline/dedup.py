@@ -312,20 +312,14 @@ def _jaccard_pairs_prefix(
     the trade is the same one the PPJoin literature makes (materialize
     the sorted token lists once): one write of the tokenized corpus
     replaces two extra full scans + tokenizations, at the documented
-    localCheckpoint executor-loss cost (compiler.py:595 note).
-
-    r15 (guide §2.5/§6): the tokenize projection runs through
-    ``spread_small_scan`` — a 0.6 MB compressed corpus file scans as
-    ONE task, serializing the split+hash+distinct CPU over a single
-    core (and pinning the checkpointed table at 1 partition, so every
-    downstream map side inherits the serialization); no-op at scale."""
-    from tsp_spark.pipeline.layout import spread_small_scan
-
-    t = spread_small_scan(df).select(
+    localCheckpoint executor-loss cost."""
+    t = df.select(
         *bucket_cols,
         F.col(id_col).alias("__id"),
         _token_set(F.col(text_col)).alias("__ws"),
-    ).withColumn("__n", F.size(F.col("__ws"))).localCheckpoint(eager=True)
+    ).withColumn("__n", F.size(F.col("__ws")))
+    # executor-loss trade: PatternCompiler.compile_intervals_multi note
+    t = t.localCheckpoint(eager=True)
     # LEVEL-2 prefix (r12, sf10-soak-found): with short Zipf documents
     # at t=0.6, classic 1-prefixes pass ~74M candidate pairs for ~10k
     # true pairs at sf10 (pairs share ~1.01 prefix tokens on average) —
@@ -370,16 +364,6 @@ def _jaccard_pairs_prefix(
             "duplicates first, use minhash_lsh_pairs, or raise "
             "max_bucket_size deliberately.",
         )
-    # Materialize the prefix table once (r14): BOTH self-join sides
-    # consume it, and the candidate join resolves as a broadcast, so
-    # there is no Exchange for ReuseExchange to deduplicate — without
-    # this the whole prefix pipeline (explode → df groupBy + join →
-    # row_number window → bucket-guard window, 2 Exchanges + 2 Sorts +
-    # 2 Windows) runs TWICE, once per side. The prefix table is the
-    # small end of the pipeline (≈ (1−t)·|d|+2 tokens per doc), the
-    # same inverted-prefix-list materialization the PPJoin literature
-    # makes; executor-loss trade documented at compiler.py:595.
-    pref = pref.localCheckpoint(eager=True)
     # size-ratio prune INSIDE the candidate join (r11, sf10-soak-found):
     # J ≥ t ⟹ t·max(|A|,|B|) ≤ min(|A|,|B|), the same theorem the
     # verification stage applies — but applied there it runs AFTER
@@ -788,6 +772,7 @@ def minhash_lsh_pairs(
     # (_neardup_process_batch) has always checkpointed its signatures
     # for the same reason; the batch path now matches. Tiny table:
     # one row per doc, num_perm longs.
+    # executor-loss trade: PatternCompiler.compile_intervals_multi note
     with_sig = with_sig.localCheckpoint(eager=True)
     exploded = with_sig.selectExpr(
         "__id", "__sig",
@@ -898,14 +883,7 @@ def _minhash_bands(
         f"CAST(conv(substring(md5(t), 1, 15), 16, 10) AS BIGINT), "
         f"{_MERSENNE}))"
     )
-    # r15 (guide §2.5/§6): per-token md5 + shingle arithmetic is the
-    # operator's CPU core — don't run it on the 1-task scan of a small
-    # compressed corpus file (no-op at scale)
-    from tsp_spark.pipeline.layout import spread_small_scan
-
-    with_th = spread_small_scan(df).selectExpr(
-        f"`{id_col}` AS __id", f"{th_sql} AS __th"
-    )
+    with_th = df.selectExpr(f"`{id_col}` AS __id", f"{th_sql} AS __th")
     acc = "__th"
     for j in range(1, shingle_k):
         # zip_with pads to the longer side with NULLs → trailing
@@ -998,13 +976,14 @@ def simhash_pairs(
             f"max_hamming ({max_hamming}) must be < bands ({bands}) or the "
             f"band join loses recall (pigeonhole needs one untouched band)"
         )
-    from tsp_spark.pipeline.layout import spread_small_scan
     from tsp_spark.pipeline.text import token_hashes_col
 
     w = bits // bands
-    # r15 (guide §2.5/§6): spread the per-token md5 pipeline off the
-    # single-task scan a small compressed corpus file produces
-    hashed = spread_small_scan(df).select(
+    # Hash-partition the docs by id before the per-token md5 work: a
+    # small compressed corpus file scans as one task, and this spreads
+    # the hashing over shuffle-partitions tasks. The vote groupBy keys
+    # on the same id, so it adds no exchange of its own.
+    hashed = df.repartition(F.col(id_col)).select(
         F.col(id_col).alias("__id"),
         token_hashes_col(text_col, bits).alias("__th"),
     )
@@ -1045,10 +1024,6 @@ def simhash_pairs(
         return f"({_balanced_sum(terms[:mid])} + {_balanced_sum(terms[mid:])})"
 
     sh_terms = [f"if(2 * v{b} > __nt, {1 << b}L, 0L)" for b in range(bits)]
-    # (r14 measured: checkpointing the fingerprints here is NEUTRAL —
-    # both band-join sides canonicalize to the same exchange, so Spark
-    # already reuses the vote pipeline via ReusedExchange; a
-    # localCheckpoint would only add a materialization barrier.)
     sh = votes.select("__id", F.expr(_balanced_sum(sh_terms)).alias("__sh"))
     # integer band extraction (literal shifts — exact at any bit
     # width, unlike the double-division path this replaced)
@@ -1068,16 +1043,6 @@ def simhash_pairs(
             "exact duplicates first (exact_dedup), raise bits, or raise "
             "max_band_bucket deliberately.",
         )
-    # Materialize the banded table once (r14): the band self-join
-    # resolves as a broadcast, so there is no shuffle for
-    # ReuseExchange to deduplicate and BOTH sides re-run the whole
-    # corpus-tokenize → per-bit-vote aggregate → guard pipeline (the
-    # captured plan showed the full 16-node chain twice). The banded
-    # table is n_docs × bands rows of 4 longs — the cheap end — and
-    # one write replaces a second full scan + vote aggregation.
-    # (The earlier "checkpoint is neutral" note measured the PRE-band
-    # fingerprint table, whose consumers did share an exchange.)
-    exploded = exploded.localCheckpoint(eager=True)
     a = exploded.selectExpr("band", "bval", "__id AS id_a", "__sh AS __sa")
     b = exploded.selectExpr("band", "bval", "__id AS id_b", "__sh AS __sb")
     pairs = (

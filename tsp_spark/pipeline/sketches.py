@@ -255,24 +255,12 @@ def cms_heavy_hitters(
     """
     col = F.col(item_col) if isinstance(item_col, str) else item_col
     items = df.where(col.isNotNull()).select(col.cast("string").alias("item"))
-    # ONE pass over the raw occurrences (the exact per-item groupBy,
-    # map-side combined); the counters are then the WEIGHTED cell sums
-    # over the distinct-item frame — identical cell values (each
+    # The counters are the WEIGHTED cell sums over the exact per-item
+    # groupBy (map-side combined) — identical cell values (each
     # occurrence of an item lands in the same d cells), but the 4-way
     # explode runs over |distinct items| rows instead of the full
-    # stream — one full-data pass total, and the saving widens with
-    # duplication at scale.
-    # r14 (guide §2.2, §3): the exact table feeds THREE consumers
-    # (counter build, candidate set, and — through the counters — the
-    # stream total), and each re-derived the groupBy from the raw
-    # occurrences (measured: the bench fold scanned + tokenized the
-    # corpus 3×; ReuseExchange does not fire across the broadcast
-    # forks). Materialize it once — it is the sketch contract's small
-    # side (|distinct items| rows of (string, long)), the same bounded
-    # table the broadcast join already ships.
-    exact = items.groupBy("item").agg(
-        F.count(F.lit(1)).alias("n_exact")
-    ).localCheckpoint()
+    # stream, and the saving widens with duplication at scale.
+    exact = items.groupBy("item").agg(F.count(F.lit(1)).alias("n_exact"))
     counters = (
         exact.selectExpr(
             "n_exact", f"explode({_cms_cells_sql('item')}) AS c"

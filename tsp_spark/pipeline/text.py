@@ -665,8 +665,8 @@ def simhash_col(text_col: str, bits: int = 16) -> Column:
     ``hashes`` wherever throughput matters: expressions captured by a
     higher-order-function lambda re-evaluate per outer array element
     (no subexpression elimination inside lambdas — see
-    curation.py:111-114), so the inline form recomputes every token's
-    md5 once per bit (review-caught: 16× the hash work)."""
+    curation.quantize_embeddings), so the inline form recomputes every
+    token's md5 once per bit (review-caught: 16× the hash work)."""
     return simhash_from_hashes(token_hashes_col(text_col, bits), bits)
 
 

@@ -1030,14 +1030,7 @@ def q_sketch_fold(spark, sf_dir):
         quantile_bottomk,
     )
 
-    # r14 (guide §2.2, §6): kmv / hll / qbk each scanned the events
-    # parquet separately (3 full corpus passes for one fold entry).
-    # Materialize the union of the columns they touch ONCE — a narrow
-    # (string, long, long, double) projection — and feed all three;
-    # at scale this is 3 corpus scans -> 1 scan + 2 local re-reads.
-    ev = _load(spark, sf_dir, "events").select(
-        "event_type", "user_id", "event_id", "value"
-    ).localCheckpoint()
+    ev = _load(spark, sf_dir, "events")
     docs = _load(spark, sf_dir, "documents")
     tokens = docs.select(
         F.explode(F.split(F.col("text"), " ")).alias("token")
@@ -1431,19 +1424,7 @@ def q_text_fingerprint(spark, sf_dir):
         structure_text_col,
     )
 
-    # r14 (guide §2.2, §6): the seven variants each re-scanned the
-    # documents parquet — 21 scans in the captured plan (the span cores
-    # read their base 2-3× internally). One narrow (doc_id, text)
-    # materialization feeds every variant: 21 corpus scans -> 1 scan +
-    # local re-reads, the dominant I/O term for this fold at scale.
-    # r15 (guide §2.5/§6): spread the 1-task small-file scan first so
-    # the checkpointed base — and every variant's tokenize/gram map
-    # side reading it — isn't pinned at one partition (no-op at scale).
-    from tsp_spark.pipeline.layout import spread_small_scan
-
-    docs = spread_small_scan(
-        _load(spark, sf_dir, "documents").select("doc_id", "text")
-    ).localCheckpoint()
+    docs = _load(spark, sf_dir, "documents").select("doc_id", "text")
     # (r14, guide §5.3: the variant selects build as selectExpr strings
     # — same parsed expressions, a fraction of the py4j round trips)
     fp = fingerprint(docs, "text", "doc_id").selectExpr(

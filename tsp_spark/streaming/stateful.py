@@ -1025,7 +1025,7 @@ def _eval_row(node, row, aggvals):
     if isinstance(node, A.Identifier):
         v = row[node.name]
         if pd.isna(v):
-            # the batch Identifier DECODE (compiler.py:267-276,
+            # the batch Identifier DECODE (PatternCompiler._compile,
             # BasicDecoders.scala:17-30): a NULL float-typed field is
             # Double.NaN — a VALUE that enters window aggregates
             # (poisoning sum/avg, counted by count, NaN-greatest for

@@ -276,7 +276,7 @@ def _num(node, df, aggvals):
         col = df[node.name]
         null = col.isna().to_numpy()
         vals = col.to_numpy(dtype=np.float64, na_value=np.nan).copy()
-        # the batch Identifier decode (compiler.py:267-276): a NULL
+        # the batch Identifier decode (PatternCompiler._compile): a NULL
         # float-typed field is the VALUE Double.NaN, not a null — it
         # enters window aggregates and compares IEEE-false. The
         # parser/compiler default undeclared fields to float64.
